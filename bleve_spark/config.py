@@ -18,9 +18,10 @@ right value instead of guessing.
 
 * ``BULK_DISJUNCTION_THRESHOLD`` — term count above which a
   disjunction compiles to one broadcast term-metadata join instead of
-  N unioned scans (at-rest stores with postings-resident norms always
-  take the bulk plan from 2 terms). Raise only if broadcast overhead
-  dominates tiny queries on your cluster.
+  N unioned scans. At-rest (``persist=False`` segment-store) indexes
+  take the bulk plan from 2 terms; that rule lives in one place,
+  ``bleve_spark.search.searcher._bulk_min_terms``. Raise only if
+  broadcast overhead dominates tiny queries on your cluster.
 
 * ``DEDUP_MAX_BUCKET_DF`` — default hot-bucket cap for the LSH /
   SimHash / embedding pair generators when the caller passes

@@ -107,50 +107,34 @@ class IndexedTable:
     # per-index override of DICT_CACHE_MAX (0 forces every dictionary
     # expansion onto the fully distributed join path)
     dict_cache_max: int | None = None
-    # at-rest pruned-read hook (r5): callable(pred) -> postings
-    # DataFrame with the (field/term) predicate pushed BELOW the
-    # chunk decode into the parquet scan. Without it, a filter over
-    # `postings` lands ABOVE the decode UDF (Catalyst cannot push
-    # through mapInPandas), so every query pays a full-store decode —
-    # fine on a persisted index, a scale-killer on a cold 100 TB
-    # store. Searcher paths route through prune_postings().
-    postings_factory: object = dc_field(default=None, repr=False)
-    # doc_num-level scoring hooks (r5, stores with posting_lens):
-    # postings_doc_factory(pred) -> (field, term, doc_num, tf, norm)
-    # with no doc-table join; doc_keys_df() -> (doc_num, keys...) for
-    # post-aggregation key resolution over matched docs only
-    postings_doc_factory: object = dc_field(default=None, repr=False)
-    doc_keys_df: object = dc_field(default=None, repr=False)
+    # at-rest reader (segments.AtRestReader) of a persist=False index
+    # served from a SegmentStore: keyed rows, doc_num scoring rows and
+    # doc keys, each with the (field, term) predicate pushed BELOW the
+    # chunk decode into the parquet scan. None on in-memory and
+    # persisted indexes, which filter ``postings`` directly.
+    at_rest: object = dc_field(default=None, repr=False)
 
     def prune_postings(self, pred, positions: bool = True,
                        spread: bool = False):
         """Postings rows matching ``pred`` (a Column over field/term):
-        via the pushed-down factory when present, else a plain
-        filter over the decoded relation.
+        through the at-rest reader when present, else a plain filter
+        over the decoded relation.
 
-        ``positions=False`` lets an at-rest factory skip reading and
+        ``positions=False`` lets the at-rest reader skip reading and
         decoding the pos_blob column entirely (the largest blob) —
         the right call for scoring-only reads (term/boolean/
         disjunction joins). On the in-memory relation it's a no-op:
         the positions column rides along, already materialized.
 
-        ``spread=True`` asks an at-rest factory to rebalance the
+        ``spread=True`` asks the at-rest reader to rebalance the
         pruned chunk rows across the cluster before decoding —
         term-sorted files colocate a hot term into one or two scan
         tasks, so a high-df decode would otherwise run
         near-single-threaded. Callers set it from known doc_freq."""
-        if self.postings_factory is not None:
-            try:
-                return self.postings_factory(
-                    pred, positions=positions, spread=spread
-                )
-            except TypeError:
-                try:
-                    return self.postings_factory(
-                        pred, positions=positions
-                    )
-                except TypeError:
-                    return self.postings_factory(pred)
+        if self.at_rest is not None:
+            return self.at_rest.keyed(
+                pred, positions=positions, spread=spread
+            )
         return self.postings.where(pred)
 
     @property

@@ -126,7 +126,15 @@ def merge_level(
     deliberately sparse: readers prune on collected literal ids and
     order comparisons only, and skipping the dense-renumber window
     avoids re-shuffling every output byte a second time just because
-    one term was hot."""
+    one term was hot.
+
+    The band key member·2^40 + chunk_id is only collision-free while
+    every banded input id is < 2^40, and a sparse id written by an
+    earlier auto round is not (colliding keys fuse bands into
+    duplicate, out-of-order output ids). So auto mode refuses to band
+    a round with any input chunk_id ≥ 2^40: that round merges
+    unbanded and writes dense ids, and the next round may band
+    again."""
     t_start = time.time()
     from bleve_spark.index.segments import SegmentStore as _SS
 
@@ -233,16 +241,21 @@ def merge_level(
         hot_min = int(_cfg.MERGE_BAND_MIN_POSTINGS)
         # metadata-only aggregation (no blob IO), per MERGE GROUP —
         # a term fanned out across many groups is only hot if one
-        # group's share crosses the threshold
+        # group's share crosses the threshold. Terms with sparse input
+        # ids ride along, largest id first, so the first row tells
+        # whether ANY input id is ≥ 2^40 (see docstring).
+        sparse = F.col("_mc") >= F.lit(1 << SEG_SHIFT)
         hot_rows = (
             rows.groupBy("new_seg", "field", "term")
-            .agg(F.sum("n_docs").alias("_np"))
-            .where(F.col("_np") > hot_min)
-            .select("field", "term").distinct()
+            .agg(F.sum("n_docs").alias("_np"),
+                 F.max("chunk_id").alias("_mc"))
+            .where((F.col("_np") > hot_min) | sparse)
+            .groupBy("field", "term").agg(F.max("_mc").alias("_mc"))
+            .orderBy(F.col("_mc").desc())
             .limit(_HOT_TERMS_MAX + 1)
             .collect()
         )
-        if hot_rows:
+        if hot_rows and hot_rows[0]["_mc"] < 1 << SEG_SHIFT:
             band_chunks = max(1, (hot_min // 2) // chunk_docs)
             if len(hot_rows) <= _HOT_TERMS_MAX:
                 hot_pred = functools.reduce(operator.or_, [
@@ -252,8 +265,9 @@ def merge_level(
                 ])
             # else: pervasive skew — band every term
     if band_chunks:
-        # band key orders by (member, chunk) — chunk_id < 2^40 always
-        # (a segment holds < 2^40 docs), so member·2^40 never collides.
+        # band key orders by (member, chunk) — collision-free while
+        # every banded chunk_id is < 2^40 (a segment holds < 2^40
+        # docs, so dense ids are; auto mode refuses sparse ones).
         # Explicit band_chunks renumbers output chunk ids densely
         # after the merge; auto mode keeps the sparse ordered ids
         # (see docstring) and bands only hot terms.
@@ -306,19 +320,12 @@ def merge_level(
         nd = pdf["n_docs"].to_numpy().astype(np.int64)
         mtf = pdf["max_tf"].to_numpy()
         mnorm = pdf["max_norm"].to_numpy()
-        has_pareto = "pareto_tf" in pdf.columns
-        par_tf = pdf["pareto_tf"].tolist() if has_pareto else None
-        par_nm = pdf["pareto_norm"].tolist() if has_pareto else None
+        par_tf = pdf["pareto_tf"].tolist()
+        par_nm = pdf["pareto_norm"].tolist()
         doc_blobs = pdf["doc_blob"].tolist()
         tf_blobs = pdf["tf_blob"].tolist()
         pos_blobs = pdf["pos_blob"].tolist()
-        len_blobs = (
-            pdf["len_blob"].tolist()
-            if "len_blob" in pdf.columns else [b""] * len(pdf)
-        )
-        lens_ok = all(
-            (lb or b"") != b"" for lb in len_blobs
-        ) if len(pdf) else False
+        len_blobs = pdf["len_blob"].tolist()
         band = int(pdf["band"].iloc[0]) if bc else 0
         fld = pdf["field"].iloc[0]
         term = pdf["term"].iloc[0]
@@ -340,9 +347,7 @@ def merge_level(
             c_min = fmin[i]
             c_maxtf = 0
             c_maxnorm = 0.0
-            c_par: dict[int, tuple[int, float]] | None = (
-                {} if has_pareto else None
-            )
+            c_par: dict[int, tuple[int, float]] = {}
             prev_last = None
             while i < n_in and (cur_n == 0 or cur_n + nd[i] <= cd):
                 blob = doc_blobs[i]
@@ -357,24 +362,18 @@ def merge_level(
                 )
                 t_parts.append(tf_blobs[i])
                 p_parts.append(pos_blobs[i])
-                if lens_ok:
-                    l_parts.append(len_blobs[i])
+                l_parts.append(len_blobs[i])
                 cur_n += int(nd[i])
                 c_maxtf = max(c_maxtf, int(mtf[i]))
                 c_maxnorm = max(c_maxnorm, float(mnorm[i]))
-                if c_par is not None:
-                    pt, pn = par_tf[i], par_nm[i]
-                    if pt is None or pn is None:
-                        c_par = None  # legacy member: no pareto out
+                for tv, nv in zip(par_tf[i], par_nm[i]):
+                    b = min(int(tv), _PARETO_CAP)
+                    old = c_par.get(b)
+                    if old is None:
+                        c_par[b] = (int(tv), float(nv))
                     else:
-                        for tv, nv in zip(pt, pn):
-                            b = min(int(tv), _PARETO_CAP)
-                            old = c_par.get(b)
-                            if old is None:
-                                c_par[b] = (int(tv), float(nv))
-                            else:
-                                c_par[b] = (max(old[0], int(tv)),
-                                            max(old[1], float(nv)))
+                        c_par[b] = (max(old[0], int(tv)),
+                                    max(old[1], float(nv)))
                 prev_last = fmax[i]
                 i += 1
             out["segment_id"].append(new_seg)
@@ -387,20 +386,14 @@ def merge_level(
             out["doc_blob"].append(b"".join(d_parts))
             out["tf_blob"].append(b"".join(t_parts))
             out["pos_blob"].append(b"".join(p_parts))
-            out["len_blob"].append(
-                b"".join(l_parts) if lens_ok else b""
-            )
+            out["len_blob"].append(b"".join(l_parts))
             out["max_tf"].append(c_maxtf)
             out["max_norm"].append(c_maxnorm)
             out["min_doc"].append(int(base_new + c_min))
             out["max_doc"].append(int(base_new + prev_last))
-            if c_par is None:
-                out["pareto_tf"].append(None)
-                out["pareto_norm"].append(None)
-            else:
-                ks = sorted(c_par)
-                out["pareto_tf"].append([c_par[b][0] for b in ks])
-                out["pareto_norm"].append([c_par[b][1] for b in ks])
+            ks = sorted(c_par)
+            out["pareto_tf"].append([c_par[b][0] for b in ks])
+            out["pareto_norm"].append([c_par[b][1] for b in ks])
             n_out += 1
         return pd.DataFrame(out)
 
@@ -414,23 +407,14 @@ def merge_level(
         base_new = np.uint64(new_seg) << np.uint64(SEG_SHIFT)
         dels = bc_deleted.value
         docs_all, tfs_all, pos_all, lens_all = [], [], [], []
-        lens_ok = True
         norms_max = 0.0
         for r in pdf.itertuples():
-            # blobs carry segment-LOCAL doc nums (mask is belt-and-
-            # braces for legacy absolute blobs); drop deleted docs and
+            # blobs carry segment-LOCAL doc nums; drop deleted docs and
             # renumber compactly into the new segment's local space
-            docs = delta_decode_sorted(r.doc_blob)
-            local = (docs & np.uint64(LOCAL_MASK)).astype(np.int64)
+            local = delta_decode_sorted(r.doc_blob).astype(np.int64)
             tfs = varint_decode(r.tf_blob)
-            plists = decode_positions(r.pos_blob, len(docs))
-            lb = getattr(r, "len_blob", None)
-            lens = (
-                varint_decode(lb)
-                if lb else np.empty(0, dtype=np.uint64)
-            )
-            if len(lens) != len(docs):
-                lens_ok = False  # legacy input without length streams
+            plists = decode_positions(r.pos_blob, len(local))
+            lens = varint_decode(r.len_blob)
             del_arr = dels.get(int(r.segment_id))
             if del_arr is not None and len(del_arr):
                 pos_in = np.searchsorted(del_arr, local)
@@ -444,8 +428,7 @@ def merge_level(
                 local = local[keep]
                 tfs = tfs[keep]
                 plists = [p for p, k in zip(plists, keep) if k]
-                if len(lens) == len(keep):
-                    lens = lens[keep]
+                lens = lens[keep]
                 # compacted live rank = local − #deleted below it
                 local = local - np.searchsorted(del_arr, local)
             off = np.uint64(int(r.doc_off))
@@ -468,11 +451,7 @@ def merge_level(
             )
         docs_a = np.concatenate(docs_all)
         tfs_a = np.concatenate(tfs_all)
-        lens_a = (
-            np.concatenate(lens_all)
-            if lens_ok and lens_all else np.empty(0, dtype=np.uint64)
-        )
-        lens_ok = lens_ok and len(lens_a) == len(docs_a)
+        lens_a = np.concatenate(lens_all)
         out = {
             "segment_id": [], "field": [], "term": [], "chunk_id": [],
             "n_docs": [], "doc_blob": [], "tf_blob": [], "pos_blob": [],
@@ -484,7 +463,6 @@ def merge_level(
             np.where(lens_a > 0,
                      1.0 / np.sqrt(np.maximum(lens_a, 1)), 0.0)
             .astype(np.float32).astype(np.float64)
-            if lens_ok else None
         )
         fld = pdf["field"].iloc[0]
         term = pdf["term"].iloc[0]
@@ -502,29 +480,23 @@ def merge_level(
             out["doc_blob"].append(delta_encode_sorted(docs_a[c0:c1]))
             out["tf_blob"].append(varint_encode(tfs_a[c0:c1]))
             out["pos_blob"].append(encode_positions(pos_all[c0:c1]))
-            out["len_blob"].append(
-                varint_encode(lens_a[c0:c1]) if lens_ok else b""
-            )
+            out["len_blob"].append(varint_encode(lens_a[c0:c1]))
             out["max_tf"].append(int(tfs_a[c0:c1].max()))
             out["max_norm"].append(norms_max)
-            if norms_a is None:
-                out["pareto_tf"].append(None)
-                out["pareto_norm"].append(None)
-            else:
-                ct = tfs_a[c0:c1].astype(np.int64)
-                cn = norms_a[c0:c1]
-                bkt = np.minimum(ct, _PARETO_CAP)
-                pp: dict[int, tuple[int, float]] = {}
-                for tv, bv, nv in zip(ct, bkt, cn):
-                    old = pp.get(int(bv))
-                    if old is None:
-                        pp[int(bv)] = (int(tv), float(nv))
-                    else:
-                        pp[int(bv)] = (max(old[0], int(tv)),
-                                       max(old[1], float(nv)))
-                ks = sorted(pp)
-                out["pareto_tf"].append([pp[b][0] for b in ks])
-                out["pareto_norm"].append([pp[b][1] for b in ks])
+            ct = tfs_a[c0:c1].astype(np.int64)
+            cn = norms_a[c0:c1]
+            bkt = np.minimum(ct, _PARETO_CAP)
+            pp: dict[int, tuple[int, float]] = {}
+            for tv, bv, nv in zip(ct, bkt, cn):
+                old = pp.get(int(bv))
+                if old is None:
+                    pp[int(bv)] = (int(tv), float(nv))
+                else:
+                    pp[int(bv)] = (max(old[0], int(tv)),
+                                   max(old[1], float(nv)))
+            ks = sorted(pp)
+            out["pareto_tf"].append([pp[b][0] for b in ks])
+            out["pareto_norm"].append([pp[b][1] for b in ks])
             # min/max_doc columns stay GLOBAL (pruning predicates
             # compare against global doc nums)
             out["min_doc"].append(int(base_new + docs_a[c0]))
@@ -676,9 +648,8 @@ def merge_level(
             "merged_from": [m["segment_id"] for m in members],
             "fields": members[0].get("fields"),
             "key_cols": members[0].get("key_cols"),
-            "posting_lens": all(
-                m.get("posting_lens") for m in members
-            ),
+            # every input passed SegmentStore.manifests' format check
+            "posting_lens": True,
         }
         dyn = sorted({
             f for m in members for f in (m.get("dynamic_fields") or [])

@@ -11,19 +11,29 @@ its rebuild.
 
 Layout under ``<root>/``:
 
-* ``postings/seg=<id>/part.parquet`` — one row per (field, term, chunk):
-  ``n_docs, doc_blob, tf_blob, pos_blob, max_tf, max_norm, min_doc,
-  max_doc, pareto_tf, pareto_norm`` — blobs are delta+varint (doc-num
-  gaps, tfs, per-doc position deltas); ``max_tf``/``max_norm`` plus
-  the per-tf-bucket (tf, norm) pareto arrays are the block-max
-  metadata driving WAND-style pruning (the pareto pairs make the
-  chunk bound near-exact instead of 2-4× loose) (bleve's only analogue is the collector
+* ``postings/seg=<id>/part.parquet`` — one row per (field, term, chunk)
+  in ONE format (:func:`_posting_schema`): ``n_docs, doc_blob,
+  tf_blob, pos_blob, len_blob, max_tf, max_norm, min_doc, max_doc,
+  pareto_tf, pareto_norm`` — blobs are delta+varint (doc-num gaps,
+  tfs, per-doc position deltas, per-posting field lengths →
+  norms); ``max_tf``/``max_norm`` plus the per-tf-bucket (tf, norm)
+  pareto arrays are the block-max metadata driving WAND-style
+  pruning (the pareto pairs make the chunk bound near-exact instead
+  of 2-4× loose) (bleve's only analogue is the collector
   floor, /root/reference/search/collector/topn.go:584-604 — ours is a
   real pre-join block skip);
 * ``docs/seg=<id>/part.parquet`` — doc table: local doc_num → key cols
-  + per-field token counts (norms derive as float32(1/√len));
+  + per-field token counts;
 * ``manifest/seg=<id>.json`` — doc_count, postings, unique terms,
-  bytes, build seconds, postings/sec.
+  bytes, build seconds, postings/sec, and ``posting_lens: true``, the
+  stamp of the format above.
+
+Every writer (:func:`_build_one_segment`, the merge) emits that format
+and stamps it. A store with a manifest lacking ``posting_lens``
+predates the format: :meth:`SegmentStore.manifests` rejects it with
+ValueError (rebuild the store), and a chunk-row stream that disagrees
+with its own metadata raises ValueError at decode — there is no
+second read path.
 
 Doc numbering: ``doc_num = segment_id·2^40 + local`` — stable, unique,
 and independent of cluster parallelism (segment assignment hashes the
@@ -42,6 +52,8 @@ import json
 import math
 import os
 import time
+import zlib
+from dataclasses import dataclass, replace
 
 import numpy as np
 import pandas as pd
@@ -50,8 +62,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from bleve_spark.analysis.analyzers import get_analyzer
 from bleve_spark.index.build import IndexedTable, IndexStats
 from bleve_spark.index.varint import (
-    decode_positions,
-    delta_decode_sorted,
     varint_decode,
     varint_encode_with_ends,
 )
@@ -506,8 +516,8 @@ def _build_one_segment(
         "postings_per_sec": (n_postings / secs) if secs > 0 else 0.0,
         "fields": list(fields),
         "key_cols": key_cols,
-        # chunk rows carry a len_blob (per-posting field length →
-        # norm); scoring reads skip the doc-table norm join
+        # the one chunk-row format (len_blob + pareto metadata);
+        # SegmentStore.manifests rejects stores without this stamp
         "posting_lens": True,
     }
     if dyn_fields:
@@ -778,21 +788,18 @@ def decode_chunk_rows(rows: DataFrame,
     token count — the reference's zap freqNorm detail) into a
     ``norm float`` column (float32 1/sqrt(len)): scoring reads norms
     straight off the postings, with NO doc-table join — the join that
-    would otherwise make every query Ω(corpus). Only valid on stores
-    whose manifests carry ``posting_lens`` (see
-    SegmentStore.has_posting_lens).
+    would otherwise make every query Ω(corpus).
 
-    The hot path is pure numpy: doc deltas via cumsum, position
+    The decode is pure numpy: doc deltas via cumsum, position
     streams via a segmented cumsum keyed off the tf vector (every
     write path emits per-doc streams as [len, deltas...] with
-    len == tf; a stream that disagrees falls back to the sequential
-    parser). No per-posting Python objects are ever built — and no
+    len == tf). No per-posting Python objects are ever built — and no
     PER-ROW ones either: each blob column's bytes are decoded as ONE
     concatenated LEB128 stream per Arrow batch (valid because LEB128
     streams are self-delimiting, and the n_docs column gives every
     row's value count), so kernel cost is O(batch) numpy calls, not
-    O(chunk-rows). A batch whose streams fail validation (foreign
-    data) falls back to the per-row loop.
+    O(chunk-rows). A batch whose streams disagree with their n_docs
+    or tf metadata is corrupt or foreign data and raises ValueError.
 
     ``with_chunk=True`` carries (segment_id, chunk_id) through to the
     output rows, letting a caller that decoded a SUPERSET of chunks
@@ -826,26 +833,37 @@ def decode_chunk_rows(rows: DataFrame,
         pa.set_cpu_count(1)
 
         def concat_view(col):
-            """Zero-copy (values, row-relative offsets) view over a
-            non-null BinaryArray's concatenated bytes."""
-            off = np.frombuffer(col.buffers()[1], dtype=np.int32)
+            """Zero-copy view over a non-null (Large)BinaryArray's
+            concatenated bytes (Spark ships large_binary under
+            spark.sql.execution.arrow.useLargeVarTypes)."""
+            off = np.frombuffer(
+                col.buffers()[1],
+                dtype=np.int64 if pa.types.is_large_binary(col.type)
+                else np.int32,
+            )
             off = off[col.offset:col.offset + len(col) + 1].astype(
                 np.int64
             )
             val = np.frombuffer(col.buffers()[2], dtype=np.uint8)
             return val[off[0]:off[-1]]
 
-        def batch_fast(b, nrows, segs, counts):
-            """Whole-batch decode: one varint pass per blob column.
-            Returns the (doc_num, tfs, lens, pos, plen) arrays or
-            None when a stream disagrees with its metadata."""
+        def corrupt(what):
+            return ValueError(
+                f"chunk-row {what} disagrees with its n_docs/tf "
+                "metadata: the segment store is corrupt or was not "
+                "written by this library"
+            )
+
+        def decode_batch(b, nrows, segs, counts):
+            """Whole-batch decode: one varint pass per blob column →
+            the (doc_num, tfs, lens, pos, plen) arrays."""
             total = int(counts.sum())
             deltas = varint_decode(concat_view(b.column("doc_blob")))
             if deltas.size != total:
-                return None
+                raise corrupt("doc_blob")
             tfs = varint_decode(concat_view(b.column("tf_blob")))
             if tfs.size != total:
-                return None
+                raise corrupt("tf_blob")
             starts = np.zeros(nrows, dtype=np.int64)
             starts[1:] = np.cumsum(counts[:-1])
             # per-row delta decode: global cumsum minus each row's
@@ -866,7 +884,7 @@ def decode_chunk_rows(rows: DataFrame,
                     concat_view(b.column("len_blob"))
                 )
                 if lens.size != total:
-                    return None
+                    raise corrupt("len_blob")
                 lens = lens.astype(np.int64)
             pos_all = plen_all = None
             if with_positions:
@@ -879,7 +897,7 @@ def decode_chunk_rows(rows: DataFrame,
                 row_tfsum = tf_cum[row_ends] - tf_cum[starts]
                 stream_lens = row_tfsum + counts
                 if flat.size != int(stream_lens.sum()):
-                    return None
+                    raise corrupt("pos_blob")
                 stream_starts = np.zeros(nrows, dtype=np.int64)
                 stream_starts[1:] = np.cumsum(stream_lens[:-1])
                 # each doc's [len, deltas...] stream begins at its
@@ -892,7 +910,7 @@ def decode_chunk_rows(rows: DataFrame,
                     + (j - starts[row_of])
                 )
                 if not np.array_equal(flat[slot], tfs):
-                    return None
+                    raise corrupt("pos_blob")
                 vals = np.delete(flat, slot)
                 dstarts = tf_cum[:-1]  # per-doc start in vals space
                 if vals.size:
@@ -918,108 +936,9 @@ def decode_chunk_rows(rows: DataFrame,
             counts = b.column("n_docs").to_numpy(
                 zero_copy_only=False
             ).astype(np.int64)
-            fast = None
-            try:
-                fast = batch_fast(b, nrows, segs, counts)
-            except (ValueError, IndexError, TypeError, AttributeError):
-                # null/absent blob buffers (foreign or legacy data)
-                # raise TypeError from np.frombuffer / AttributeError
-                # from a None buffer — fall back to the per-row parser
-                fast = None
-            if fast is not None:
-                doc_num, tfs_all, lens_all, pos_all, plen_all = fast
-                yield _emit(
-                    pa, pc, b, nrows, counts, doc_num, tfs_all,
-                    lens_all, pos_all, plen_all,
-                )
-                continue
-            dblob = b.column("doc_blob")
-            tblob = b.column("tf_blob")
-            pblob = b.column("pos_blob") if with_positions else None
-            lblob = b.column("len_blob") if with_norm else None
-            doc_parts, tf_parts, pos_parts = [], [], []
-            plen_parts, len_parts = [], []
-            counts = np.empty(nrows, dtype=np.int64)
-            for i in range(nrows):
-                base = np.uint64(int(segs[i])) << np.uint64(
-                    SEG_SHIFT
-                )
-                docs = delta_decode_sorted(dblob[i].as_py())
-                nd = docs.size
-                counts[i] = nd
-                if not nd:
-                    continue
-                doc_parts.append(
-                    (docs + base).astype(np.int64)
-                )
-                tfs = varint_decode(tblob[i].as_py()).astype(
-                    np.int64
-                )
-                tf_parts.append(tfs)
-                if with_norm:
-                    len_parts.append(
-                        varint_decode(lblob[i].as_py()).astype(
-                            np.int64
-                        )
-                    )
-                if not with_positions:
-                    continue
-                flat = varint_decode(pblob[i].as_py()).astype(
-                    np.int64
-                )
-                # the per-doc streams are [len, deltas...] with
-                # len == tf on every write path — locate the
-                # length slots from the tfs and verify; fall back
-                # to the sequential parse if a foreign stream
-                # disagrees
-                slot = np.zeros(nd, dtype=np.int64)
-                slot[1:] = np.cumsum(tfs[:-1] + 1)
-                if flat.size == int(tfs.sum()) + nd and (
-                    np.array_equal(flat[slot], tfs)
-                ):
-                    vals = np.delete(flat, slot)
-                    if vals.size:
-                        # segmented cumsum: positions are per-doc
-                        # deltas — global cumsum minus each doc's
-                        # start offset
-                        cs = np.cumsum(vals)
-                        starts = np.zeros(nd, dtype=np.int64)
-                        starts[1:] = np.cumsum(tfs[:-1])
-                        seg_base = cs[starts] - vals[starts]
-                        pos_parts.append(
-                            cs - np.repeat(seg_base, tfs)
-                        )
-                    else:
-                        pos_parts.append(vals)
-                    plen_parts.append(tfs)
-                else:
-                    plists = decode_positions(
-                        pblob[i].as_py(), nd
-                    )
-                    pos_parts.append(
-                        np.concatenate(
-                            [p.astype(np.int64) for p in plists]
-                        )
-                        if plists else
-                        np.empty(0, dtype=np.int64)
-                    )
-                    # tf stays the tf_blob value; list offsets
-                    # follow the STREAM's per-doc counts
-                    plen_parts.append(np.array(
-                        [p.size for p in plists], dtype=np.int64
-                    ) if plists else np.zeros(nd, dtype=np.int64))
-            if not doc_parts:
-                continue
             yield _emit(
                 pa, pc, b, nrows, counts,
-                np.concatenate(doc_parts),
-                np.concatenate(tf_parts),
-                np.concatenate(len_parts) if with_norm else None,
-                (np.concatenate(pos_parts)
-                 if pos_parts else np.empty(0, dtype=np.int64))
-                if with_positions else None,
-                np.concatenate(plen_parts)
-                if with_positions else None,
+                *decode_batch(b, nrows, segs, counts),
             )
 
     def _emit(pa, pc, b, nrows, counts, doc_num, tfs_all,
@@ -1074,23 +993,6 @@ class SegmentStore:
         self.spark = spark
         self.root = root
         self._has_dynamic: bool | None = None
-        self._has_lens: bool | None = None
-
-    def has_posting_lens(self) -> bool:
-        """True when every segment's chunk rows carry the len_blob
-        stream (per-posting field length → norm): scoring decodes
-        norms off the postings with no doc-table join. False on
-        legacy stores or merges that included one. Cached: reads the
-        (tiny, local) manifests once."""
-        if self._has_lens is None:
-            try:
-                ms = self.manifests()
-                self._has_lens = bool(ms) and all(
-                    m.get("posting_lens") for m in ms
-                )
-            except OSError:
-                self._has_lens = False
-        return self._has_lens
 
     def _dynamic_fields_present(self) -> bool:
         """True when any segment carries dynamic-map fields — their
@@ -1118,15 +1020,11 @@ class SegmentStore:
         if "seg" in df.columns:
             df = df.drop("seg")
         if not with_blobs:
-            cols = [
+            df = df.select(
                 "segment_id", "field", "term", "chunk_id", "n_docs",
                 "max_tf", "max_norm", "min_doc", "max_doc",
-            ]
-            # pareto bound metadata (newer stores; readers fall back
-            # to the (max_tf, max_norm) bound when absent)
-            if "pareto_tf" in df.columns:
-                cols += ["pareto_tf", "pareto_norm"]
-            df = df.select(*cols)
+                "pareto_tf", "pareto_norm",
+            )
         return df
 
     def doc_table(self, live_only: bool = True) -> DataFrame:
@@ -1271,97 +1169,59 @@ class SegmentStore:
         )
 
     def manifest_stamp(self) -> tuple[int, float]:
-        """Cheap change detector over the manifest listing: (hash of
-        the sorted name tuple, max mtime). Used as part of planning
-        cache keys; same single-listing contract as
-        :meth:`manifest_names`."""
+        """Cheap change detector over the manifest listing: (crc32 of
+        the sorted names, max mtime). Used as part of planning cache
+        keys; same single-listing contract as :meth:`manifest_names`.
+        The digest is stable across processes (``hash`` of a str is
+        salted per process by PYTHONHASHSEED)."""
         mdir = os.path.join(self.root, "manifest")
         names = self.manifest_names()
         mt = max(
             (os.path.getmtime(os.path.join(mdir, n)) for n in names),
             default=0.0,
         )
-        return (hash(tuple(names)), mt)
+        return (zlib.crc32("\0".join(names).encode()), mt)
 
     def manifests(self) -> list[dict]:
+        """Every segment's manifest. Raises ValueError on a segment
+        whose manifest lacks ``posting_lens``: its chunk rows predate
+        the one at-rest format, and the store must be rebuilt."""
         mdir = os.path.join(self.root, "manifest")
         out = []
         for fn in self.manifest_names():
             with open(os.path.join(mdir, fn)) as f:
-                out.append(json.load(f))
+                m = json.load(f)
+            if not m.get("posting_lens"):
+                raise ValueError(
+                    f"segment store {self.root!r}: manifest {fn} lacks "
+                    "posting_lens (chunk rows without len_blob/pareto "
+                    "columns); rebuild the store"
+                )
+            out.append(m)
         return out
 
-    # -- decode -------------------------------------------------------
-    def decode(self, pred=None) -> DataFrame:
-        """Chunk rows (optionally filtered by a Column predicate —
-        pushed into the parquet scan) → exploded postings:
-        (field, term, doc_num, tf, positions).
-
-        One Arrow batch kernel, no per-posting Python: a hot term's
-        millions of postings decode as numpy array ops (the r4
-        minhash-fold lesson — a per-row loop here made a single
-        high-df term leg cost ~60s at 20M turns; this kernel does it
-        in ~2s)."""
-        rows = self.chunk_rows(with_blobs=True)
-        if pred is not None:
-            rows = rows.where(pred)
-        return decode_chunk_rows(rows)
-
-    def postings_df(self, key_cols: list[str],
-                    fields: list[str], pred=None,
+    def postings_df(self, key_cols: list[str], pred=None,
                     positions: bool = True,
                     spread: bool = False) -> DataFrame:
         """Full postings relation (field, term, keys..., tf, positions,
         norm) — the same shape index_table() produces, reconstructed
         from the compressed store. ``positions=False`` drops the
         positions column AND the pos_blob read below it: scoring-only
-        consumers never touch the store's largest blob column."""
+        consumers never touch the store's largest blob column.
+
+        Norms ride IN the postings (len_blob → float32 1/sqrt(len),
+        the zap freqNorm detail), so the doc table only maps doc_num →
+        key columns (its inner join also drops deleted docs)."""
         rows = self.chunk_rows(with_blobs=True)
         if pred is not None:
             rows = rows.where(pred)
-        docs = self.doc_table()
+        decoded = decode_chunk_rows(
+            rows, with_positions=positions, with_norm=True, spread=spread
+        )
         pos_cols = ["positions"] if positions else []
-        if self.has_posting_lens():
-            # norms ride IN the postings (len_blob → float32
-            # 1/sqrt(len), the zap freqNorm detail): the doc-table
-            # join shrinks to doc_num → key columns only — no wide
-            # len_* projection, no norm map
-            decoded = decode_chunk_rows(
-                rows, with_positions=positions, with_norm=True
-            )
-            return decoded.join(
-                docs.select("doc_num", *key_cols), "doc_num"
-            ).select(
-                "field", "term", *key_cols, "tf", *pos_cols, "norm"
-            )
-        decoded = decode_chunk_rows(rows, with_positions=positions)
-        # legacy stores (no len_blob): norm per field from the doc
-        # table's stored token counts; the len_* columns are
-        # authoritative (a superset of `fields` — composites and
-        # data-driven dynamic-map fields included)
-        fields = sorted(
-            {*fields, *(
-                c[len("len_"):] for c in docs.columns
-                if c.startswith("len_")
-            )}
-        )
-        norm_map = F.create_map(
-            *[x for fname in fields for x in (
-                F.lit(fname),
-                F.when(
-                    F.col(f"`len_{fname}`") > 0,
-                    (F.lit(1.0) / F.sqrt(F.col(f"`len_{fname}`")))
-                    .cast("float"),
-                ).otherwise(F.lit(None).cast("float")),
-            )]
-        )
-        docs2 = docs.select(
-            "doc_num", *key_cols, norm_map.alias("_norms")
-        )
-        return decoded.join(docs2, "doc_num").select(
-            "field", "term", *key_cols, "tf", *pos_cols,
-            F.element_at("_norms", F.col("field")).alias("norm"),
-        )
+        return decoded.join(
+            self.doc_table().select("doc_num", *key_cols), "doc_num"
+        ).select("field", "term", *key_cols, "tf", *pos_cols, "norm")
 
     def stats(self, fields: list[str], scoring: str = "bm25") -> IndexStats:
         """Bleve-exact multi-segment stats: field cardinality = Σ
@@ -1400,7 +1260,7 @@ class SegmentStore:
         scoring: str = "bm25",
         persist: bool = False,
     ) -> IndexedTable:
-        postings = self.postings_df(key_cols, list(fields))
+        postings = self.postings_df(key_cols)
         idx = IndexedTable(
             source=source,
             postings=postings,
@@ -1414,36 +1274,7 @@ class SegmentStore:
             idx.postings = idx.postings.persist()
             idx._persisted.append(idx.postings)
         else:
-            # cold-store read path (r5): route every searcher read
-            # through postings_df(pred) so (field, term) predicates
-            # land in the parquet chunk scan BEFORE the decode UDF —
-            # a term query on a 100 TB store reads that term's
-            # chunks, not the whole store (Catalyst cannot push a
-            # filter through mapInPandas, so without this hook the
-            # persist=False index full-decodes per query)
-            kc, fl = list(key_cols), list(fields)
-            idx.postings_factory = (
-                lambda pred, positions=True, spread=False:
-                self.postings_df(
-                    kc, fl, pred, positions=positions, spread=spread
-                )
-            )
-            if self.has_posting_lens():
-                # doc_num-level scoring reads (field, term, doc_num,
-                # tf, norm) with NO doc-table involvement; consumers
-                # aggregate per doc_num first, then resolve keys via
-                # doc_keys_df over matched docs only (the inner join
-                # against the live doc table also drops deletions)
-                idx.postings_doc_factory = (
-                    lambda pred, spread=False: decode_chunk_rows(
-                        self.chunk_rows(with_blobs=True).where(pred),
-                        with_positions=False, with_norm=True,
-                        spread=spread,
-                    )
-                )
-                idx.doc_keys_df = (
-                    lambda: self.doc_table().select("doc_num", *kc)
-                )
+            idx.at_rest = AtRestReader(self, tuple(key_cols))
         if persist or has_dels:
             # live-doc dictionary (deletions drop out via the doc-
             # table join inside postings_df)
@@ -1492,6 +1323,58 @@ class SegmentStore:
             return {}
         with open(p) as f:
             return json.load(f)
+
+
+@dataclass(frozen=True)
+class AtRestReader:
+    """The read interface of a ``persist=False`` index served from a
+    :class:`SegmentStore` (``IndexedTable.at_rest``).
+
+    Every read pushes its (field, term) predicate — ANDed with
+    ``where`` — into the parquet chunk scan BEFORE the decode UDF, so
+    a term query on a 100 TB store reads that term's chunks, not the
+    whole store (Catalyst cannot push a filter through mapInArrow; a
+    filter over ``IndexedTable.postings`` would full-decode per
+    query)."""
+
+    store: SegmentStore
+    key_cols: tuple
+    # extra predicate on every read (a live mapping update's dropped
+    # fields); None reads everything
+    where: object = None
+
+    def _pred(self, pred):
+        return pred if self.where is None else pred & self.where
+
+    def restricted(self, pred) -> "AtRestReader":
+        """This reader with ``pred`` ANDed into every read."""
+        return replace(self, where=self._pred(pred))
+
+    def keyed(self, pred, positions: bool = True,
+              spread: bool = False) -> DataFrame:
+        """Keyed postings rows (field, term, keys..., tf[, positions],
+        norm) — the in-memory ``postings`` shape."""
+        return self.store.postings_df(
+            list(self.key_cols), pred=self._pred(pred),
+            positions=positions, spread=spread,
+        )
+
+    def scoring(self, pred, spread: bool = False) -> DataFrame:
+        """Scoring rows (field, term, doc_num, tf, norm) with no
+        doc-table join: consumers aggregate per doc_num first, then
+        resolve keys through :meth:`doc_keys` over matched docs only
+        (that inner join against the live doc table also drops
+        deletions)."""
+        return decode_chunk_rows(
+            self.store.chunk_rows(with_blobs=True).where(
+                self._pred(pred)
+            ),
+            with_positions=False, with_norm=True, spread=spread,
+        )
+
+    def doc_keys(self) -> DataFrame:
+        """(doc_num, keys...) of the live docs."""
+        return self.store.doc_table().select("doc_num", *self.key_cols)
 
 
 class _EpochView(SegmentStore):

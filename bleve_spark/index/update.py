@@ -382,31 +382,13 @@ def apply_index_update(idx, upd: IndexMapping):
         new.postings = idx.postings.where(
             ~F.col("field").isin(drop_index)
         )
-        # an at-rest index reads through postings_factory, which
-        # bypasses the filtered `postings` relation — wrap it so the
-        # drop predicate rides inside the pushed-down chunk scan
-        fac = getattr(idx, "postings_factory", None)
-        if fac is not None:
-            def _upd_factory(pred, positions=True, _fac=fac,
-                             _drop=list(drop_index), **kw):
-                # forward spread= (and any future hints) so hot-term
-                # decode repartitioning survives a live mapping update
-                full = pred & ~F.col("field").isin(_drop)
-                try:
-                    return _fac(full, positions=positions, **kw)
-                except TypeError:
-                    return _fac(full)
-            new.postings_factory = _upd_factory
-        dfac = getattr(idx, "postings_doc_factory", None)
-        if dfac is not None:
-            def _upd_doc_factory(pred, _f=dfac,
-                                 _d=list(drop_index), **kw):
-                full = pred & ~F.col("field").isin(_d)
-                try:
-                    return _f(full, **kw)
-                except TypeError:
-                    return _f(full)
-            new.postings_doc_factory = _upd_doc_factory
+        # an at-rest index reads through its reader, which bypasses
+        # the filtered `postings` relation — the drop rides inside
+        # every pushed-down chunk scan instead
+        if idx.at_rest is not None:
+            new.at_rest = idx.at_rest.restricted(
+                ~F.col("field").isin(drop_index)
+            )
         if idx.dictionary is not None:
             new.dictionary = idx.dictionary.where(
                 ~F.col("field").isin(drop_index)

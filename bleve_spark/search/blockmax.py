@@ -5,9 +5,10 @@ The reference's only top-k pruning is the collector floor
 block-max upgrade the north rule asks for, expressed as DataFrame
 pre-join pruning:
 
-1. every chunk row carries (max_tf, max_norm) — an upper bound on any
-   BM25 contribution from that chunk is computable WITHOUT opening the
-   blob (BM25 is increasing in tf and in norm — max fieldLength⁻¹);
+1. every chunk row carries per-tf-bucket (tf, norm) pareto maxima — an
+   upper bound on any BM25 contribution from that chunk is computable
+   WITHOUT opening the blob (BM25 is increasing in tf and in norm —
+   max fieldLength⁻¹);
 2. θ comes from metadata alone: pareto bucket scores are ACHIEVED by
    real docs (a tf bucket below the cap holds only that exact tf), so
    the k-th highest per-chunk achieved score of the rarest term names
@@ -113,27 +114,19 @@ def _score_expr(idf: float, avg_len: float, tf_col, norm_col):
     )
 
 
-def _bound_col(idf: float, avg_len: float, pareto: bool = False):
-    """Upper-bound BM25 score for a chunk.
-
-    Legacy bound: score(max_tf, max_norm) — sound but loose, because
-    the max-tf doc and the shortest doc are usually different docs (a
-    measured 2-4× overstatement that kills pruning). With ``pareto``
-    (stores whose chunks carry the per-tf-bucket (tf, norm) pareto
-    metadata) the bound is max over buckets of score(tf_b, norm_b) —
-    near-exact, evaluated JVM-side over the tiny metadata arrays; null
-    pareto rows (legacy segments in a mixed store) fall back."""
-    legacy = _score_expr(idf, avg_len, F.col("max_tf"),
-                         F.col("max_norm"))
-    if not pareto:
-        return legacy
-    tight = F.array_max(
+def _bound_col(idf: float, avg_len: float):
+    """Upper-bound BM25 score for a chunk: max over its per-tf-bucket
+    (tf, norm) pareto pairs of score(tf_b, norm_b) — near-exact,
+    evaluated JVM-side over the tiny metadata arrays. (The chunk's
+    (max_tf, max_norm) pair is sound but loose: the max-tf doc and
+    the shortest doc are usually different docs, a measured 2-4×
+    overstatement that kills pruning.)"""
+    return F.array_max(
         F.zip_with(
             "pareto_tf", "pareto_norm",
             lambda t, n: _score_expr(idf, avg_len, t, n),
         )
     )
-    return F.coalesce(tight, legacy)
 
 
 def _coalesce_intervals(
@@ -202,18 +195,15 @@ def pruned_disjunction_topk(
     ).persist()
     try:
         avg = stats.avg_len(field)
-        use_pareto = "pareto_tf" in chunks.columns
-        achieved_raw = None
-        if use_pareto:
-            achieved_raw = F.array_max(
-                F.zip_with(
-                    "pareto_tf", "pareto_norm",
-                    lambda t, n: _score_expr(
-                        1.0, avg,
-                        F.least(t, F.lit(PARETO_TF_CAP)), n,
-                    ),
-                )
+        achieved_raw = F.array_max(
+            F.zip_with(
+                "pareto_tf", "pareto_norm",
+                lambda t, n: _score_expr(
+                    1.0, avg,
+                    F.least(t, F.lit(PARETO_TF_CAP)), n,
+                ),
             )
+        )
         # ---- metadata phase. Fast path: when the query terms' chunk
         # metadata fits META_COLLECT_MAX rows (it almost always does —
         # a term needs >256M postings to overflow), collect it ONCE
@@ -226,10 +216,9 @@ def pruned_disjunction_topk(
         meta_cols = [
             "segment_id", "term", "chunk_id", "n_docs",
             "min_doc", "max_doc",
-            _bound_col(1.0, avg, use_pareto).alias("_b"),
+            _bound_col(1.0, avg).alias("_b"),
+            achieved_raw.alias("_a"),
         ]
-        if achieved_raw is not None:
-            meta_cols.append(achieved_raw.alias("_a"))
         cache_key = (
             _store_fingerprint(store), field, tuple(sorted(terms)),
         )
@@ -249,7 +238,7 @@ def pruned_disjunction_topk(
             for r in head:
                 t = r["term"]
                 df_by_term[t] = df_by_term.get(t, 0) + int(r["n_docs"])
-                b = float(r["_b"]) if r["_b"] is not None else 0.0
+                b = float(r["_b"])
                 if b > raw_max.get(t, 0.0):
                     raw_max[t] = b
         else:
@@ -258,9 +247,7 @@ def pruned_disjunction_topk(
                 chunks.groupBy("term")
                 .agg(
                     F.sum("n_docs").alias("df"),
-                    F.max(
-                        _bound_col(1.0, avg, use_pareto)
-                    ).alias("_raw"),
+                    F.max(_bound_col(1.0, avg)).alias("_raw"),
                 )
                 .collect()
             )
@@ -300,7 +287,6 @@ def pruned_disjunction_topk(
 
         sum_gmax = sum(gmax.values())
         total_postings = sum(df_by_term.values())
-        use_lens = store.has_posting_lens()
         blob_rows = store.chunk_rows(with_blobs=True).where(
             (F.col("field") == field) & F.col("term").isin(terms)
         )
@@ -315,12 +301,10 @@ def pruned_disjunction_topk(
         # k-th highest per-chunk achieved score over the rare term's
         # chunks therefore names k distinct docs (one per chunk) whose
         # final ≥ achieved·qw_rare/total — a valid θ from one tiny
-        # metadata top-k, no blob IO at all. Legacy stores (no pareto)
-        # have no achieved metadata: θ stays 0 and the call degrades
-        # to the plain one-decode disjunction plan.
+        # metadata top-k, no blob IO at all.
         theta = 0.0
         surv_postings = total_postings
-        if use_pareto and dels is None and driver_meta:
+        if dels is None and driver_meta:
             # deleted docs would poison the achieved-score θ (their
             # pareto entries still name them), so stores with live
             # deletions skip pruning; merges reclaim deletes, so the
@@ -333,8 +317,7 @@ def pruned_disjunction_topk(
             # disjunction plan below.
             av = sorted(
                 (
-                    float(r["_a"]) for r in head
-                    if r["term"] == rare and r["_a"] is not None
+                    float(r["_a"]) for r in head if r["term"] == rare
                 ),
                 reverse=True,
             )
@@ -360,8 +343,7 @@ def pruned_disjunction_topk(
             iq = {t: idfs[t] * qw[t] for t in terms}
             surv_rows = [
                 r for r in head
-                if ((float(r["_b"]) if r["_b"] is not None
-                     else 0.0) * iq[r["term"]]
+                if (float(r["_b"]) * iq[r["term"]]
                     + others_of[r["term"]]) * coord_max >= theta
             ]
             if len(surv_rows) > SURV_PREDICATE_MAX:
@@ -436,7 +418,7 @@ def pruned_disjunction_topk(
             rescore_postings = sum(int(r["n_docs"]) for r in rescore)
             decoded = decode_chunk_rows(
                 blob_rows.where(_chunk_pred(rescore)),
-                with_positions=False, with_norm=use_lens,
+                with_positions=False, with_norm=True,
                 with_chunk=True,
                 # spread by the PRUNED decode size — the unpruned
                 # term df would force a pointless repartition stage
@@ -447,7 +429,7 @@ def pruned_disjunction_topk(
             # pruning can't win (θ=0 or survivors ≈ everything):
             # single unpruned decode — the plain bulk-disjunction plan
             decoded = decode_chunk_rows(
-                blob_rows, with_positions=False, with_norm=use_lens,
+                blob_rows, with_positions=False, with_norm=True,
                 spread=spread,
             )
             if dels is not None:
@@ -458,24 +440,12 @@ def pruned_disjunction_topk(
             "term string, idf double, qw double",
         )
         tf = F.sqrt(F.col("tf").cast("double"))
-        if use_lens:
-            # norm rides in the postings: score + aggregate on
-            # doc_num alone; the doc table enters only AFTER the
-            # per-doc aggregation — a join over matched candidates,
-            # not a corpus-sized norm lookup per posting
-            joined = decoded.join(F.broadcast(meta), "term")
-            norm = F.col("norm").cast("double")
-        else:
-            docs = store.doc_table().select(
-                "doc_num", F.col(f"len_{field}").alias("_len")
-            )
-            joined = decoded.join(docs, "doc_num").join(
-                F.broadcast(meta), "term"
-            )
-            norm = F.when(
-                F.col("_len") > 0,
-                (F.lit(1.0) / F.sqrt(F.col("_len"))).cast("float"),
-            ).cast("double")
+        # norm rides in the postings: score + aggregate on doc_num
+        # alone; the doc table enters only AFTER the per-doc
+        # aggregation — a join over matched candidates, not a
+        # corpus-sized norm lookup per posting
+        joined = decoded.join(F.broadcast(meta), "term")
+        norm = F.col("norm").cast("double")
         fl = F.lit(1.0) / (norm * norm)
         s = (
             F.col("idf") * (tf * F.lit(BM25_K1))

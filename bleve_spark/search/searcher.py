@@ -335,14 +335,8 @@ class SConj(SNode):
 
         Distinctness matters: the union plan counts each duplicate
         leg separately, the bulk join would collapse them into one
-        postings row. Engaged on at-rest stores with postings-resident
-        norms (any n — it removes per-term corpus-sized doc joins) or
-        past the bulk threshold elsewhere."""
-        min_n = (
-            2 if getattr(ctx.idx, "postings_doc_factory", None)
-            is not None else _cfg.BULK_DISJUNCTION_THRESHOLD
-        )
-        if len(self.children) < min_n:
+        postings row. Engaged from :func:`_bulk_min_terms` terms."""
+        if len(self.children) < _bulk_min_terms(ctx):
             return None
         terms, fields = [], set()
         for c in self.children:
@@ -426,13 +420,11 @@ class SDisj(SNode):
             out |= c.fields_used()
         return out
 
-    def _bulk_terms(self, min_n: int | None = None
-                    ) -> list[STerm] | None:
-        """All-STerm same-field disjunctions compile to one broadcast
-        join — the scale path for big dictionary expansions."""
-        if min_n is None:
-            min_n = _cfg.BULK_DISJUNCTION_THRESHOLD
-        if len(self.children) < min_n:
+    def _bulk_terms(self, ctx) -> list[STerm] | None:
+        """All-STerm same-field disjunctions of at least
+        :func:`_bulk_min_terms` terms compile to one broadcast join —
+        the scale path for big dictionary expansions."""
+        if len(self.children) < _bulk_min_terms(ctx):
             return None
         terms = []
         fields = set()
@@ -452,15 +444,7 @@ class SDisj(SNode):
         if min_req > total:
             return ctx.empty()
 
-        # on an at-rest store with postings-resident norms, even a
-        # 2-term OR wins from the bulk plan: one term-pruned decode +
-        # one doc_num groupBy, keys joined after aggregation —
-        # instead of per-term corpus joins unioned then re-grouped
-        min_bulk = (
-            2 if getattr(ctx.idx, "postings_doc_factory", None)
-            is not None else _cfg.BULK_DISJUNCTION_THRESHOLD
-        )
-        bulk = self._bulk_terms(min_bulk)
+        bulk = self._bulk_terms(ctx)
         if bulk is not None:
             return self._compile_bulk(ctx, bulk, total, min_req)
 
@@ -513,11 +497,7 @@ class SDisj(SNode):
         # per-term reads each joining the doc table. With min>1 the
         # union plan counts duplicate-term legs separately, so the
         # bulk collapse is only safe on distinct terms.
-        min_bulk = (
-            2 if getattr(ctx.idx, "postings_doc_factory", None)
-            is not None else _cfg.BULK_DISJUNCTION_THRESHOLD
-        )
-        bulk = self._bulk_terms(min_bulk)
+        bulk = self._bulk_terms(ctx)
         if bulk is not None and (
             min_req <= 1
             or len({t.term for t in bulk}) == len(bulk)
@@ -536,6 +516,18 @@ class SDisj(SNode):
             .where(F.col("_cnt") >= min_req)
             .drop("_cnt")
         )
+
+
+def _bulk_min_terms(ctx) -> int:
+    """Fewest same-field term legs that compile to the one-join bulk
+    plan (SConj/SDisj). On an at-rest index even 2 terms win: one
+    term-pruned decode + one doc_num groupBy, keys joined after
+    aggregation — instead of per-term corpus joins unioned then
+    re-grouped. Elsewhere the bulk plan starts at
+    config.BULK_DISJUNCTION_THRESHOLD."""
+    if ctx.idx.at_rest is not None:
+        return 2
+    return _cfg.BULK_DISJUNCTION_THRESHOLD
 
 
 def _bulk_join_score(ctx, fld: str, mdf, total, min_req,
@@ -559,13 +551,9 @@ def _bulk_join_score(ctx, fld: str, mdf, total, min_req,
     # only (its inner join against the live doc table also drops
     # deleted docs) — never a corpus-sized per-posting join
     spread = sum_df >= _cfg.SPREAD_MIN_DF
-    doc_fac = getattr(ctx.idx, "postings_doc_factory", None)
-    if doc_fac is not None:
-        try:
-            rows = doc_fac(pred, spread=spread)
-        except TypeError:
-            rows = doc_fac(pred)
-        rows = rows.join(mdf, "term")
+    reader = ctx.idx.at_rest
+    if reader is not None:
+        rows = reader.scoring(pred, spread=spread).join(mdf, "term")
     else:
         rows = ctx.idx.prune_postings(
             pred, positions=False, spread=spread
@@ -598,7 +586,7 @@ def _bulk_join_score(ctx, fld: str, mdf, total, min_req,
             * F.col("_idf")
         )
     per = F.when(F.col("_qw") != 1.0, per * F.col("_qw")).otherwise(per)
-    group = ["doc_num"] if doc_fac is not None else list(ctx.keys)
+    group = ["doc_num"] if reader is not None else list(ctx.keys)
     rows = rows.select(*group, per.alias("score"))
     agg = rows.groupBy(*group).agg(
         F.sum("score").alias("_sum"),
@@ -613,8 +601,8 @@ def _bulk_join_score(ctx, fld: str, mdf, total, min_req,
             / F.lit(float(total))
         ).alias("score"),
     )
-    if doc_fac is not None:
-        out = out.join(ctx.idx.doc_keys_df(), "doc_num").select(
+    if reader is not None:
+        out = out.join(reader.doc_keys(), "doc_num").select(
             *ctx.keys, "score"
         )
     return out
@@ -632,14 +620,11 @@ def _bulk_join_docs(ctx, fld: str, terms: list[str],
     a multiset, fine for semi/anti-join consumers."""
     pred = (F.col("field") == fld) & F.col("term").isin(list(terms))
     spread = sum_df >= _cfg.SPREAD_MIN_DF
-    doc_fac = getattr(ctx.idx, "postings_doc_factory", None)
-    if doc_fac is not None:
-        try:
-            rows = doc_fac(pred, spread=spread)
-        except TypeError:
-            rows = doc_fac(pred)
+    reader = ctx.idx.at_rest
+    if reader is not None:
+        rows = reader.scoring(pred, spread=spread)
         if min_req <= 1 and not dedup:
-            return rows.join(ctx.idx.doc_keys_df(), "doc_num").select(
+            return rows.join(reader.doc_keys(), "doc_num").select(
                 *ctx.keys
             )
         agg = rows.groupBy("doc_num").agg(
@@ -647,7 +632,7 @@ def _bulk_join_docs(ctx, fld: str, terms: list[str],
         )
         if min_req > 1:
             agg = agg.where(F.col("_cnt") >= min_req)
-        return agg.join(ctx.idx.doc_keys_df(), "doc_num").select(
+        return agg.join(reader.doc_keys(), "doc_num").select(
             *ctx.keys
         )
     rows = ctx.idx.prune_postings(pred, positions=False, spread=spread)

@@ -34,7 +34,7 @@ def test_file_build_matches_inmemory(spark, transcripts, tindex,
 
     store = SegmentStore(spark, root)
     got = (
-        store.postings_df(["conv_id", "turn_idx"], ["text"])
+        store.postings_df(["conv_id", "turn_idx"])
         .select("field", "term", "conv_id", "turn_idx", "tf", "norm")
     )
     want = tindex.postings.where(F.col("field") == "text").select(

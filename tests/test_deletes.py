@@ -34,7 +34,7 @@ def test_delete_hides_docs_and_merge_reclaims(spark, transcripts, store):
     assert store.doc_table().count() == total - n_victims
     live_keys = {
         (r["conv_id"], r["turn_idx"])
-        for r in store.postings_df(KEYS, ["text"])
+        for r in store.postings_df(KEYS)
         .select(*KEYS).distinct().collect()
     }
     assert all(k[0] >= "conv00000005" for k in live_keys)
@@ -71,7 +71,7 @@ def test_update_docs_replaces_rows(spark, transcripts, store):
     total = transcripts.count()
     assert store.doc_table().count() == total  # same doc population
     # new content searchable, old content for that conv gone
-    post = store.postings_df(KEYS, ["text"])
+    post = store.postings_df(KEYS)
     zebra = post.where(F.col("term") == "zebra")
     assert zebra.count() == n_upd
     old_terms = post.where(
@@ -118,11 +118,11 @@ def test_snapshot_rollback(spark, transcripts, store):
     # e2: conv 3's old rows deleted, fresh rows in a new segment
     assert v2.doc_table().count() == total - nv
     assert (
-        v2.postings_df(KEYS, ["text"])
+        v2.postings_df(KEYS)
         .where(F.col("term") == "zzz").count() > 0
     )
     assert (
-        v1.postings_df(KEYS, ["text"])
+        v1.postings_df(KEYS)
         .where(F.col("term") == "zzz").count() == 0
     )
 

@@ -305,9 +305,9 @@ def test_apply_update_store_drop_enforced(spark):
 
 
 def test_apply_update_drops_field_at_rest_factory(spark, tmp_path):
-    """An at-rest (persist=False) index reads postings through the
-    pushed-down postings_factory — the update must thread its drop
-    predicate INTO the factory, not just the in-memory relation,
+    """An at-rest (persist=False) index reads postings through its
+    pushed-down at-rest reader — the update must thread its drop
+    predicate INTO the reader, not just the in-memory relation,
     or the deleted field keeps matching from the chunk scan."""
     from bleve_spark.index.mapping import index_with_mapping_at_rest
     from bleve_spark.search.searcher import search_df
@@ -322,7 +322,7 @@ def test_apply_update_drops_field_at_rest_factory(spark, tmp_path):
         df, ["doc_id"], _corpus_mapping(True),
         str(tmp_path / "upd_store"), n_segments=2, persist=False,
     )
-    assert idx.postings_factory is not None
+    assert idx.at_rest is not None
     assert search_df(idx, {"field": "source", "term": "web"},
                      size=10).count() == 2
     before_text = {

@@ -45,7 +45,7 @@ def _postings_set(df, keys):
 def test_roundtrip_equals_inmemory(spark, transcripts, seg_root):
     store = SegmentStore(spark, seg_root)
     from_store = _postings_set(
-        store.postings_df(KEYS, list(FIELDS)), KEYS
+        store.postings_df(KEYS), KEYS
     )
     idx = index_table(transcripts, KEYS, FIELDS, persist=False)
     in_mem = _postings_set(idx.postings, KEYS)
@@ -77,7 +77,7 @@ def test_resume_rebuilds_only_missing(spark, transcripts, seg_root):
     store = SegmentStore(spark, seg_root)
     idx = index_table(transcripts, KEYS, FIELDS, persist=False)
     assert (
-        store.postings_df(KEYS, list(FIELDS)).count()
+        store.postings_df(KEYS).count()
         == idx.postings.count()
     )
 
@@ -123,14 +123,14 @@ def test_merge_to_single(spark, transcripts, seg_root):
 def test_cold_store_term_query_prunes_scan(spark, transcripts,
                                            seg_root):
     """persist=False at-rest index (r5): searcher reads route through
-    postings_factory, so the (field, term) predicate lands in the
+    the at-rest reader, so the (field, term) predicate lands in the
     parquet CHUNK scan below the decode UDF — a term query on a
     100 TB store must read that term's chunks, not the whole store.
     The dictionary likewise aggregates chunk metadata (n_docs/max_tf)
     without touching blobs."""
     store = SegmentStore(spark, seg_root)
     idx_seg = store.to_indexed_table(transcripts, KEYS, FIELDS)
-    assert idx_seg.postings_factory is not None
+    assert idx_seg.at_rest is not None
 
     pruned = idx_seg.prune_postings(
         (F.col("field") == "text") & (F.col("term") == "quick")
@@ -195,11 +195,11 @@ def test_merge_banded_equals_plain(spark, transcripts, seg_root,
     merge_level(spark, seg_root, band_root, fanin=4, band_chunks=1)
 
     plain = _postings_set(
-        SegmentStore(spark, plain_root).postings_df(KEYS, list(FIELDS)),
+        SegmentStore(spark, plain_root).postings_df(KEYS),
         KEYS,
     )
     banded = _postings_set(
-        SegmentStore(spark, band_root).postings_df(KEYS, list(FIELDS)),
+        SegmentStore(spark, band_root).postings_df(KEYS),
         KEYS,
     )
     assert plain == banded and len(plain) > 0
@@ -346,12 +346,12 @@ def test_tiered_merge_preserves_postings(spark, transcripts, tmp_path):
         transcripts, KEYS, {"text": "standard"}, root, n_segments=12
     )
     before = _postings_set(
-        SegmentStore(spark, root).postings_df(KEYS, ["text"]), KEYS
+        SegmentStore(spark, root).postings_df(KEYS), KEYS
     )
     final = tiered_merge(spark, root)
     assert final != root  # 12 tiny segments must trigger merging
     store = SegmentStore(spark, final)
-    after = _postings_set(store.postings_df(KEYS, ["text"]), KEYS)
+    after = _postings_set(store.postings_df(KEYS), KEYS)
     assert before == after
     assert len(store.manifests()) < 12
 
@@ -361,8 +361,8 @@ def test_positions_free_read_matches(spark, transcripts, seg_root):
     every non-position column AND must not expose a positions column
     (the pos_blob read is skipped entirely — the scoring-only path)."""
     store = SegmentStore(spark, seg_root)
-    full = store.postings_df(KEYS, list(FIELDS))
-    slim = store.postings_df(KEYS, list(FIELDS), positions=False)
+    full = store.postings_df(KEYS)
+    slim = store.postings_df(KEYS, positions=False)
     assert "positions" not in slim.columns
     strip = lambda s: {t[:4] + t[5:] for t in s}
     assert {
@@ -374,19 +374,22 @@ def test_positions_free_read_matches(spark, transcripts, seg_root):
 
 def test_conjunction_bulk_matches_union(spark, transcripts, seg_root):
     """The SConj bulk plan (one term-pruned postings join + one
-    doc_num groupBy on stores with postings-resident norms) must be
-    score-identical to the per-term union + HAVING count plan: an AND
-    of n distinct terms is the min=n disjunction, coord = n/n = 1."""
+    doc_num groupBy on an at-rest index) must be score-identical to
+    the per-term union + HAVING count plan that a persisted index of
+    the same store takes below BULK_DISJUNCTION_THRESHOLD terms: an
+    AND of n distinct terms is the min=n disjunction, coord = n/n =
+    1."""
     from bleve_spark.search.searcher import search_df
 
     store = SegmentStore(spark, seg_root)
-    mk = lambda: store.to_indexed_table(
+    idx_bulk = store.to_indexed_table(
         transcripts, KEYS, FIELDS, persist=False
     )
-    idx_bulk = mk()
-    assert idx_bulk.postings_doc_factory is not None
-    idx_union = mk()
-    idx_union.postings_doc_factory = None  # forces the union plan
+    assert idx_bulk.at_rest is not None
+    idx_union = store.to_indexed_table(
+        transcripts, KEYS, FIELDS, persist=True
+    )
+    assert idx_union.at_rest is None  # keyed union plan
     queries = [
         {"field": "text", "match": "quick brown", "operator": "and"},
         {"field": "text", "match": "quick brown fox",
@@ -414,6 +417,7 @@ def test_conjunction_bulk_matches_union(spark, transcripts, seg_root):
             for r in search_df(idx_union, q, size=9000).collect()
         }
         assert a == b and a, q
+    idx_union.unpersist()
 
 
 def test_merged_files_are_term_sorted(spark, transcripts, tmp_path):
@@ -585,8 +589,63 @@ def test_merge_auto_banding_hot_term(spark, transcripts, seg_root,
     )
     assert cool_ids == list(range(len(cool_ids)))
     # postings identical to the unbanded wide merge
-    a = _postings_set(sw.postings_df(KEYS, list(FIELDS)), KEYS)
-    b = _postings_set(sn.postings_df(KEYS, list(FIELDS)), KEYS)
+    a = _postings_set(sw.postings_df(KEYS), KEYS)
+    b = _postings_set(sn.postings_df(KEYS), KEYS)
+    assert a == b and len(a) > 0
+
+
+def test_merge_auto_banding_multi_round(spark, transcripts, tmp_path):
+    """band_chunks="auto" across >= 3 merge rounds with a planted hot
+    term: an auto round writes the hot term's chunk ids sparse
+    (member·2^40 + chunk), so the next round's band key must not read
+    them as < 2^40 — colliding keys fuse bands and emit duplicate,
+    out-of-order chunk ids. Postings must equal the unbanded merge,
+    and chunk ids must stay unique and doc-ordered per (segment,
+    field, term)."""
+    from bleve_spark import config as cfg
+
+    src = transcripts.where(F.col("conv_id") < "conv00000006").withColumn(
+        "text", F.concat_ws(" ", F.lit("hotterm"), F.col("text"))
+    )
+    base = str(tmp_path / "base")
+    build_segments(src, KEYS, FIELDS, base, n_segments=8, chunk_docs=2)
+    r1 = str(tmp_path / "auto")
+    r2 = str(tmp_path / "plain")
+    shutil.copytree(base, r1)
+    shutil.copytree(base, r2)
+    n_hot = src.count()
+    old = cfg.MERGE_BAND_MIN_POSTINGS
+    try:
+        # hot in every round's groups (>= 1/8 of the docs per group);
+        # the planted term is the only one that frequent
+        cfg.configure(MERGE_BAND_MIN_POSTINGS=n_hot // 16)
+        w = merge_to_single(spark, r1, fanin=2, chunk_docs=2)
+    finally:
+        cfg.configure(MERGE_BAND_MIN_POSTINGS=old)
+    assert w.endswith("_L3")
+    n = merge_to_single(spark, r2, fanin=None, chunk_docs=2,
+                        band_chunks=None)
+
+    sw = SegmentStore(spark, w)
+    rows = sw.chunk_rows().select(
+        "segment_id", "field", "term", "chunk_id", "min_doc"
+    ).collect()
+    by_term: dict = {}
+    for r in rows:
+        by_term.setdefault(
+            (r["segment_id"], r["field"], r["term"]), []
+        ).append((int(r["chunk_id"]), int(r["min_doc"])))
+    hot = sorted(by_term[(0, "text", "hotterm")])
+    assert len(hot) > 1
+    for key, chunks in by_term.items():
+        ids = [c for c, _ in chunks]
+        assert len(ids) == len(set(ids)), key
+        docs = [d for _, d in sorted(chunks)]
+        assert docs == sorted(docs), key
+    a = _postings_set(sw.postings_df(KEYS), KEYS)
+    b = _postings_set(
+        SegmentStore(spark, n).postings_df(KEYS), KEYS
+    )
     assert a == b and len(a) > 0
 
 
@@ -604,3 +663,68 @@ def test_manifest_listing_single_point(spark, seg_root):
     assert len(full.manifests()) == 4
     assert len(two.manifests()) == 2
     assert two.manifest_stamp() != full.manifest_stamp()
+
+
+def test_manifest_stamp_stable_across_hash_seeds(tmp_path):
+    """manifest_stamp keys the block-max planning cache; it must not
+    depend on the per-process str hash salt (PYTHONHASHSEED)."""
+    import subprocess
+    import sys
+
+    mdir = tmp_path / "manifest"
+    mdir.mkdir()
+    for i in range(3):
+        (mdir / f"seg={i}.json").write_text("{}")
+    code = (
+        "import sys; from bleve_spark.index.segments import "
+        "SegmentStore; print(SegmentStore(None, sys.argv[1])"
+        ".manifest_stamp()[0])"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    stamps = set()
+    for seed in ("1", "2"):
+        env = {**os.environ, "PYTHONHASHSEED": seed,
+               "PYTHONPATH": repo}
+        out = subprocess.run(
+            [sys.executable, "-c", code, str(tmp_path)], env=env,
+            capture_output=True, text=True, check=True,
+        )
+        stamps.add(out.stdout.strip())
+    assert len(stamps) == 1, stamps
+
+
+def test_store_without_posting_lens_rejected(spark, seg_root, tmp_path):
+    """One at-rest format: a store whose manifest lacks the
+    posting_lens stamp predates it and must be rebuilt — readers
+    raise instead of serving it through a second path."""
+    import json
+
+    root = str(tmp_path / "legacy")
+    shutil.copytree(seg_root, root)
+    mpath = os.path.join(root, "manifest", "seg=1.json")
+    with open(mpath) as f:
+        m = json.load(f)
+    del m["posting_lens"]
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+    store = SegmentStore(spark, root)
+    with pytest.raises(ValueError, match="rebuild"):
+        store.manifests()
+    with pytest.raises(ValueError, match="posting_lens"):
+        store.to_indexed_table(None, KEYS, FIELDS)
+
+
+def test_decode_large_binary_blobs(spark, seg_root):
+    """With spark.sql.execution.arrow.useLargeVarTypes Spark ships the
+    blob columns as large_binary (int64 offsets); the batch decode
+    must read them, not reject them as corrupt."""
+    key = "spark.sql.execution.arrow.useLargeVarTypes"
+    store = SegmentStore(spark, seg_root)
+    want = _postings_set(store.postings_df(KEYS), KEYS)
+    old = spark.conf.get(key, "false")
+    try:
+        spark.conf.set(key, "true")
+        got = _postings_set(store.postings_df(KEYS), KEYS)
+    finally:
+        spark.conf.set(key, old)
+    assert got == want and want
